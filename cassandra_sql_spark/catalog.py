@@ -138,12 +138,22 @@ class Catalog:
         }
         self.save()
 
-    def nextval(self, name: str) -> int:
+    def reserve(self, name: str, n: int) -> int:
+        """Advance sequence ``name`` by ``n`` values in one step and return
+        the first of them. Nothing is written here: the write statement
+        that uses the values persists the advance with its own ``save()``.
+        Values reserved by a statement that fails stay consumed (a gap, as
+        in pg); the next ``save()`` persists them."""
         with self._lock:
             seq = self.sequences[name]
-            seq["current"] += seq["increment"]
+            first = seq["current"] + seq["increment"]
+            seq["current"] += n * seq["increment"]
+        return first
+
+    def nextval(self, name: str) -> int:
+        value = self.reserve(name, 1)
         self.save()
-        return self.sequences[name]["current"]
+        return value
 
     def currval(self, name: str) -> int:
         return self.sequences[name]["current"]

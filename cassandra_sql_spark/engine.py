@@ -11,15 +11,16 @@ views); everything query-shaped goes through ``preprocess`` ->
 Storage: managed tables are versioned parquet directories
 (``tables/<name>/v<k>``). UPDATE/DELETE/TRUNCATE write ``v<k+1>`` then
 flip the catalog pointer — the same O(1) lazy-drop/truncate trick the
-reference plays with truncateTimestamp (kv/TableMetadata.java:119-141),
-minus the background vacuum (old versions are removed eagerly once the
-new version is committed). On a Delta/Iceberg deployment this class
-delegates to the table format; semantics are identical.
+reference plays with truncateTimestamp (kv/TableMetadata.java:119-141).
+Old versions are kept as immutable snapshots for ``VERSION AS OF`` until
+``VACUUM`` removes them (the reference's VacuumJob, run on demand). On a
+Delta/Iceberg deployment this class delegates to the table format;
+semantics are identical.
 
 Constraint enforcement (reference kv/KvQueryExecutor.java:4276-4472):
-NOT NULL, ENUM domains, UNIQUE/PK, and FK existence are validated with
-set-based anti-join/aggregate checks over the incoming batch — no
-row-at-a-time loops.
+CHECK, NOT NULL and ENUM domains are one aggregate over the incoming
+batch, each UNIQUE/PK set one grouped query over the batch keys and the
+existing keys, each FK one anti-join — no row-at-a-time loops.
 """
 
 from __future__ import annotations
@@ -28,9 +29,14 @@ import os
 import re
 import shutil
 import time
+from contextlib import contextmanager
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from cassandra_sql_spark.catalog import Catalog, ColumnMeta, TableMeta, ViewMeta
@@ -43,6 +49,15 @@ from cassandra_sql_spark.sqlfront.preprocess import (
 )
 
 _IDENT = r"[A-Za-z_][\w]*"
+# statements after which the pg_catalog views may be out of date, and
+# statements that may read them (any pg_ identifier, conservatively)
+_DDL_RE = re.compile(
+    r"\s*(CREATE|DROP|ALTER|TRUNCATE|REFRESH|ANALYZE)\b", re.IGNORECASE
+)
+_PG_NAME_RE = re.compile(r"\bpg_\w+", re.IGNORECASE)
+# key under which Spark stores a parquet file's Spark schema (read back
+# when the file is read without a schema)
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
 class EngineError(Exception):
@@ -67,6 +82,17 @@ def _extract_check(text: str) -> str | None:
             if depth == 0:
                 return text[start:i].strip()
     return None
+
+
+@contextmanager
+def _cached(df: DataFrame):
+    """``df`` cached for the duration of the block, released on exit,
+    whether the block returns or raises."""
+    df = df.cache()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def split_statements(sql: str) -> list[str]:
@@ -127,13 +153,16 @@ class Engine:
             self._register_view(view)
         for fname, fmeta in self.catalog.functions.items():
             self._register_function(fname, fmeta)
-        self._register_pg_catalog()
+        self._pg_stale = True  # built by the first sql() that needs them
 
     # ------------------------------------------------------------------ util
 
     def _status(self, msg: str, n: int = -1) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(msg, n)], "status string, rows bigint"
+        # an inline table is a LocalRelation: no Python-side rows to ship,
+        # and collecting it runs no Spark job
+        text = msg.replace("\\", "\\\\").replace("'", "\\'")
+        return self.spark.sql(
+            f"VALUES ('{text}', CAST({int(n)} AS BIGINT)) AS t(status, rows)"
         )
 
     def _register(self, meta: TableMeta) -> None:
@@ -209,8 +238,10 @@ class Engine:
         The reference materializes pg_namespace/pg_class/pg_attribute/
         pg_type/pg_index/pg_proc/pg_database as real KV tables so psql/JDBC
         introspection works (kv/PgCatalogManager.java:23-36). Here they are
-        zero-cost temp views regenerated on DDL; hidden system columns are
-        excluded, matching what the reference's catalog exposes. Relation
+        temp views over local rows, rebuilt lazily: DDL only marks them
+        stale, and ``sql()`` calls this before the next statement that
+        names a pg_ relation. Hidden system columns are excluded, matching
+        what the reference's catalog exposes. Relation
         OIDs are assigned from 16384 (the PG user-object floor) in sorted
         registration order so `\\d`-style joins across
         pg_class/pg_attribute/pg_type/pg_index work.
@@ -455,8 +486,24 @@ class Engine:
             return self.spark.read.schema(meta.spark_ddl()).parquet(meta.path)
         return self.spark.createDataFrame([], meta.spark_ddl())
 
+    def _write_empty(self, meta: TableMeta) -> None:
+        """Write ``meta.path`` as a zero-row version without a Spark job:
+        one parquet file written by pyarrow, carrying the Spark schema
+        under the key Spark writes it to, so a read without a schema
+        (``VERSION AS OF``) sees the declared types."""
+        schema = StructType.fromDDL(meta.spark_ddl())
+        arrow = to_arrow_schema(schema).with_metadata(
+            {_SPARK_ROW_METADATA: schema.json()}
+        )
+        shutil.rmtree(meta.path, ignore_errors=True)
+        os.makedirs(meta.path)
+        pq.write_table(
+            arrow.empty_table(), os.path.join(meta.path, "part-00000.parquet")
+        )
+
     def _rewrite(self, meta: TableMeta, df: DataFrame) -> None:
-        """Write a new table version, flip the pointer, drop the old one."""
+        """Write a new table version and flip the pointer to it. The old
+        version stays for ``VERSION AS OF`` until VACUUM removes it."""
         base = os.path.dirname(meta.path) if re.search(
             r"/v\d+$", meta.path
         ) else meta.path
@@ -522,23 +569,20 @@ class Engine:
 
     def sql(self, text: str) -> DataFrame:
         """Execute one or more statements; returns the last result."""
-        result = self._status("ok", 0)
-        ddl_seen = False
+        result = None
         for stmt in split_statements(text):
-            if ddl_seen and re.match(r"\s*(SELECT|WITH)\b", stmt, re.I):
-                # a later SELECT in the batch may read pg_catalog
+            # the pg_catalog views are rebuilt only when a statement may
+            # read them after DDL made them stale, so DDL itself and
+            # scripts of many DDL statements never pay for them
+            if self._pg_stale and _PG_NAME_RE.search(stmt):
                 self._register_pg_catalog()
-                ddl_seen = False
+                self._pg_stale = False
+            if _DDL_RE.match(stmt):
+                # marked before running: a DDL statement that fails
+                # part-way may still have changed the catalog
+                self._pg_stale = True
             result = self._one(stmt)
-            ddl_seen = ddl_seen or bool(re.match(
-                r"\s*(CREATE|DROP|ALTER|TRUNCATE|REFRESH)\b", stmt, re.I
-            ))
-        if ddl_seen:
-            # regenerate the ~17 pg_catalog views ONCE per batch, not per
-            # DDL statement (a N-statement restore script was O(N) full
-            # regenerations of all relation/attribute/constraint rows)
-            self._register_pg_catalog()
-        return result
+        return result if result is not None else self._status("ok", 0)
 
     def _one(self, stmt: str) -> DataFrame:
         s = stmt.strip()
@@ -1040,9 +1084,7 @@ class Engine:
         meta.partition_by = partition_by
         meta.path = os.path.join(self.catalog.table_path(name), "v1")
         self.catalog.add_table(meta)
-        self.spark.createDataFrame([], meta.spark_ddl()).write.mode(
-            "overwrite"
-        ).parquet(meta.path)
+        self._write_empty(meta)
         self._register(meta)
         return self._status(f"create table {name}")
 
@@ -1103,7 +1145,6 @@ class Engine:
             self.catalog.save()
             self.spark.catalog.dropTempView(old)
             self._register(meta)
-            self._register_pg_catalog()
             return self._status(f"rename {old} -> {new}")
         if au.startswith("RENAME"):
             rm_ = re.match(
@@ -1159,7 +1200,6 @@ class Engine:
                     if fk[1] == meta.name:
                         fk[2] = [new_c if k == old_c else k for k in fk[2]]
             self._rewrite(meta, df)
-            self._register_pg_catalog()
             return self._status(f"rename column {old_c} -> {new_c}")
         if au.startswith("ADD COLUMN") or (
             au.startswith("ADD") and not au.startswith(
@@ -1213,7 +1253,6 @@ class Engine:
             self._validate(probe, self._read(meta), against_existing=False)
             meta.checks.append(expr)
             self.catalog.save()
-            self._register_pg_catalog()
             return self._status("alter add check")
         if "FOREIGN KEY" in au:
             fk = re.search(
@@ -1527,13 +1566,14 @@ class Engine:
         src = src.toDF(*cols)
         # fill identity columns not provided (reference SERIAL semantics,
         # kv/KvQueryExecutor.java:1563-1813 auto-increment)
+        rows = None
         for c in meta.columns:
             if c.name not in cols:
                 if c.identity:
-                    rows = src.count()
-                    seq = f"{meta.name}_{c.name}_seq"
-                    vals = [self.catalog.nextval(seq) for _ in range(rows)]
-                    base = vals[0] if vals else 1
+                    rows = src.count() if rows is None else rows
+                    base = self.catalog.reserve(
+                        f"{meta.name}_{c.name}_seq", rows
+                    )
                     w = F.row_number().over(
                         Window.orderBy(F.monotonically_increasing_id())
                     )
@@ -1565,12 +1605,29 @@ class Engine:
         )
         if conflict is not None:
             return self._insert_on_conflict(meta, src, conflict, returning)
-        self._validate(meta, src.cache())
-        n = src.count()
-        self._append(meta, src)
-        if returning is not None:
-            return self._returning(src, meta, returning)
-        return self._status(f"insert {meta.name}", n)
+        return self._append_checked(
+            meta, src, returning, f"insert {meta.name}"
+        )
+
+    def _append_checked(
+        self,
+        meta: TableMeta,
+        batch: DataFrame,
+        returning: str | None,
+        status: str,
+    ) -> DataFrame:
+        """Validate ``batch`` and append it as a new version. The batch is
+        cached for the checks and the write and released afterwards; a
+        RETURNING result is materialized from it first, so it holds
+        exactly the rows written."""
+        with _cached(batch) as batch:
+            n = self._validate(meta, batch)
+            self._append(meta, batch)
+            if returning is not None:
+                return self._returning(
+                    batch, meta, returning
+                ).localCheckpoint()
+        return self._status(status, n)
 
     def _returning(self, df, meta: TableMeta, returning: str):
         """Project a DML RETURNING clause; bare * excludes the hidden
@@ -1624,12 +1681,10 @@ class Engine:
                 .drop("__rn")
                 .join(existing.select(*key), key, "left_anti")
             )
-            self._validate(meta, fresh.cache())
-            n = fresh.count()
-            self._append(meta, fresh)
-            if returning is not None:
-                return self._returning(fresh, meta, returning)
-            return self._status(f"insert {meta.name} (conflicts skipped)", n)
+            return self._append_checked(
+                meta, fresh, returning,
+                f"insert {meta.name} (conflicts skipped)",
+            )
         if returning is not None:
             raise EngineError(
                 "RETURNING with ON CONFLICT DO UPDATE is not supported"
@@ -1675,48 +1730,24 @@ class Engine:
         meta: TableMeta,
         batch: DataFrame,
         against_existing: bool = True,
-    ) -> None:
-        """Constraint checks, set-based. ``against_existing=False`` is the
-        full-table-rewrite mode (UPDATE): the batch IS the new table, so
-        uniqueness is checked within the batch only — joining against the
-        old version would clash every unchanged row with itself."""
-        for e in meta.checks:
-            # pg semantics: CHECK passes on TRUE or NULL, fails on FALSE
-            bad = batch.filter(
-                ~F.coalesce(F.expr(preprocess(e)), F.lit(True))
-            )
-            if bad.limit(1).count():
-                raise EngineError(f"CHECK violated: {meta.name}: {e}")
-        for c in meta.columns:
-            if not c.nullable or c.name in meta.primary_key:
-                if batch.filter(F.col(c.name).isNull()).limit(1).count():
-                    raise EngineError(f"NOT NULL violated: {meta.name}.{c.name}")
-            if c.enum_type:
-                domain = self.catalog.enums[c.enum_type]
-                bad = batch.filter(
-                    ~F.col(c.name).isin(*domain) & F.col(c.name).isNotNull()
-                )
-                if bad.limit(1).count():
-                    v = bad.select(c.name).first()[0]
-                    raise EngineError(
-                        f"invalid {c.enum_type} value for {c.name}: {v!r}"
-                    )
+        counted: Column | None = None,
+    ) -> int:
+        """Constraint checks, set-based; returns the number of batch rows,
+        or of those where ``counted`` holds. ``against_existing=False`` is
+        the full-table-rewrite mode (UPDATE): the batch IS the new table,
+        so uniqueness is checked within the batch only — joining against
+        the old version would clash every unchanged row with itself.
+
+        One aggregate checks every CHECK/NOT NULL/enum rule, one grouped
+        query per UNIQUE set checks both the within-batch and the
+        against-existing case, and each FK is one anti-join. Violations
+        raise in rule order: CHECKs, then per column NOT NULL and enum,
+        then per UNIQUE set within-batch before against-existing, then
+        FKs."""
+        n = self._check_rows(meta, batch, counted)
         existing = self._read(meta) if against_existing else None
         for ucols in meta.unique:
-            dup = (
-                batch.groupBy(*ucols).count().filter(F.col("count") > 1)
-            )
-            if dup.limit(1).count():
-                raise EngineError(
-                    f"UNIQUE violated within batch: {meta.name}({','.join(ucols)})"
-                )
-            if existing is None:
-                continue
-            clash = batch.join(existing.select(*ucols), ucols, "left_semi")
-            if clash.limit(1).count():
-                raise EngineError(
-                    f"UNIQUE violated: {meta.name}({','.join(ucols)})"
-                )
+            self._check_unique(meta, ucols, batch, existing)
         for fcols, ref, rcols in meta.foreign_keys:
             if ref not in self.catalog.tables:
                 continue
@@ -1733,6 +1764,90 @@ class Engine:
                     f"FK violated: {meta.name}({','.join(fcols)}) -> "
                     f"{ref}({','.join(rcols)})"
                 )
+        return n
+
+    def _check_rows(
+        self, meta: TableMeta, batch: DataFrame, counted: Column | None = None
+    ) -> int:
+        """The row-level rules (CHECK, NOT NULL, enum domain) as one
+        aggregate over ``batch``, which also counts its rows (or those
+        where ``counted`` holds). Raises for the first rule, in rule
+        order, that some row breaks."""
+        # (violation flag, message, column whose first bad value the
+        # message names)
+        rules: list[tuple[Column, str, str | None]] = []
+        for e in meta.checks:
+            # pg semantics: CHECK passes on TRUE or NULL, fails on FALSE
+            rules.append((
+                ~F.coalesce(F.expr(preprocess(e)), F.lit(True)),
+                f"CHECK violated: {meta.name}: {e}",
+                None,
+            ))
+        for c in meta.columns:
+            if not c.nullable or c.name in meta.primary_key:
+                rules.append((
+                    F.col(c.name).isNull(),
+                    f"NOT NULL violated: {meta.name}.{c.name}",
+                    None,
+                ))
+            if c.enum_type:
+                domain = self.catalog.enums[c.enum_type]
+                rules.append((
+                    ~F.col(c.name).isin(*domain) & F.col(c.name).isNotNull(),
+                    f"invalid {c.enum_type} value for {c.name}",
+                    c.name,
+                ))
+        count = (
+            F.count(F.lit(1)) if counted is None
+            else F.count_if(F.coalesce(counted, F.lit(False)))
+        )
+        row = batch.agg(count, *[F.bool_or(r[0]) for r in rules]).first()
+        for (flag, msg, value_col), hit in zip(rules, row[1:]):
+            if hit:
+                if value_col:
+                    v = batch.filter(flag).select(value_col).first()[0]
+                    msg = f"{msg}: {v!r}"
+                raise EngineError(msg)
+        return row[0]
+
+    def _check_unique(
+        self,
+        meta: TableMeta,
+        ucols: list[str],
+        batch: DataFrame,
+        existing: DataFrame | None,
+    ) -> None:
+        """One grouped query over the batch keys (and the existing keys,
+        when given) raising for a key twice in the batch or a batch key
+        already in the table. Keys with a NULL are never equal (pg)."""
+        keys = batch.select(*ucols, F.lit(1).alias("__in_batch"))
+        if existing is not None:
+            keys = keys.unionByName(
+                existing.select(*ucols, F.lit(0).alias("__in_batch"))
+            )
+        complete = reduce(
+            lambda a, b: a & b, [F.col(c).isNotNull() for c in ucols]
+        )
+        groups = (
+            keys.filter(complete)
+            .groupBy(*ucols)
+            .agg(
+                F.sum("__in_batch").alias("__b"),
+                F.count(F.lit(1)).alias("__n"),
+            )
+        )
+        within, clash = groups.agg(
+            F.bool_or(F.col("__b") > 1),
+            F.bool_or((F.col("__b") > 0) & (F.col("__n") > F.col("__b"))),
+        ).first()
+        if within:
+            raise EngineError(
+                f"UNIQUE violated within batch: {meta.name}({','.join(ucols)})"
+            )
+        if clash:
+            raise EngineError(
+                f"UNIQUE violated: {meta.name}({','.join(ucols)})"
+            )
 
     @staticmethod
     def _toplevel_keyword(s: str, word: str) -> int:
@@ -1819,13 +1934,17 @@ class Engine:
         # the predicate (pg `WHERE EXISTS (SELECT 1 FROM o WHERE o.id =
         # t.id)`) resolve the outer reference
         df = self._read(meta).alias(meta.name)
-        n = df.filter(cond).count()
+        # __hit marks the rows the predicate selects: the constraint check
+        # counts them, the rewrite drops the column
         out = df.withColumns(
             {
-                c: F.when(cond, F.expr(e)).otherwise(F.col(c)).cast(
-                    meta.column(c).spark_type
-                )
-                for c, e in sets.items()
+                **{
+                    c: F.when(cond, F.expr(e)).otherwise(F.col(c)).cast(
+                        meta.column(c).spark_type
+                    )
+                    for c, e in sets.items()
+                },
+                "__hit": F.coalesce(cond, F.lit(False)),
             }
         )
         gen = {
@@ -1835,9 +1954,11 @@ class Engine:
         }
         if gen:
             out = out.withColumns(gen)
-        if meta.checks or meta.unique or meta.foreign_keys:
-            self._validate(meta, out.cache(), against_existing=False)
-        self._rewrite(meta, out)
+        with _cached(out) as out:
+            n = self._validate(
+                meta, out, against_existing=False, counted=F.col("__hit")
+            )
+            self._rewrite(meta, out.drop("__hit"))
         if returning is not None:
             # the updated rows with their NEW values (pg RETURNING reads
             # the post-update tuple): apply the SETs unconditionally to
@@ -1899,64 +2020,67 @@ class Engine:
             f"SELECT {tname}.__tid AS __tid, {new_cols} "
             f"FROM __upd_target AS {tname}, {preprocess(from_sql)} "
             f"WHERE {cond}"
-        ).cache()
-        ambiguous = (
-            matched.groupBy("__tid").count().filter(F.col("count") > 1)
         )
-        if ambiguous.limit(1).count():
-            raise EngineError(
-                "UPDATE ... FROM matches a target row more than once; "
-                "make the join condition unique (pg leaves this "
-                "unspecified — this engine refuses the nondeterminism)"
+        with _cached(matched) as matched:
+            ambiguous = (
+                matched.groupBy("__tid").count().filter(F.col("count") > 1)
             )
-        n = matched.count()
-        hit = matched.withColumn("__hit", F.lit(True))
-        joined = t.join(hit, "__tid", "left")
-        out = joined.withColumns(
-            {
-                c: F.when(
-                    F.coalesce(F.col("__hit"), F.lit(False)),
-                    F.col(f"__new_{c}"),
+            if ambiguous.limit(1).count():
+                raise EngineError(
+                    "UPDATE ... FROM matches a target row more than once; "
+                    "make the join condition unique (pg leaves this "
+                    "unspecified — this engine refuses the nondeterminism)"
                 )
-                .otherwise(F.col(c))
-                .cast(meta.column(c).spark_type)
-                for c in sets
-            }
-        )
-        gen = {
-            c.name: F.expr(preprocess(c.generated)).cast(c.spark_type)
-            for c in meta.columns
-            if c.generated
-        }
-        if gen:
-            out = out.withColumns(gen)
-        out = out.drop(
-            "__tid", "__hit", *[f"__new_{c}" for c in sets]
-        )
-        if meta.checks or meta.unique or meta.foreign_keys:
-            self._validate(meta, out.cache(), against_existing=False)
-        ret = None
-        if returning is not None:
-            updated = joined.filter(
-                F.coalesce(F.col("__hit"), F.lit(False))
-            )
-            updated = updated.withColumns(
+            hit = matched.withColumn("__hit", F.lit(True))
+            joined = t.join(hit, "__tid", "left")
+            out = joined.withColumns(
                 {
-                    c: F.col(f"__new_{c}").cast(meta.column(c).spark_type)
+                    c: F.when(
+                        F.coalesce(F.col("__hit"), F.lit(False)),
+                        F.col(f"__new_{c}"),
+                    )
+                    .otherwise(F.col(c))
+                    .cast(meta.column(c).spark_type)
                     for c in sets
                 }
             )
+            gen = {
+                c.name: F.expr(preprocess(c.generated)).cast(c.spark_type)
+                for c in meta.columns
+                if c.generated
+            }
             if gen:
-                updated = updated.withColumns(gen)
-            ret = self._returning(
-                updated.drop(
-                    "__tid", "__hit", *[f"__new_{c}" for c in sets]
-                ).localCheckpoint(eager=True),
-                meta,
-                returning,
-            )
-        self._rewrite(meta, out)
-        matched.unpersist()
+                out = out.withColumns(gen)
+            # __hit stays until the rewrite: the constraint check counts it
+            out = out.drop("__tid", *[f"__new_{c}" for c in sets])
+            with _cached(out) as out:
+                n = self._validate(
+                    meta, out, against_existing=False,
+                    counted=F.col("__hit"),
+                )
+                ret = None
+                if returning is not None:
+                    updated = joined.filter(
+                        F.coalesce(F.col("__hit"), F.lit(False))
+                    )
+                    updated = updated.withColumns(
+                        {
+                            c: F.col(f"__new_{c}").cast(
+                                meta.column(c).spark_type
+                            )
+                            for c in sets
+                        }
+                    )
+                    if gen:
+                        updated = updated.withColumns(gen)
+                    ret = self._returning(
+                        updated.drop(
+                            "__tid", "__hit", *[f"__new_{c}" for c in sets]
+                        ).localCheckpoint(eager=True),
+                        meta,
+                        returning,
+                    )
+                self._rewrite(meta, out.drop("__hit"))
         if ret is not None:
             return ret
         return self._status(f"update {meta.name}", n)
@@ -2034,18 +2158,18 @@ class Engine:
             f"SELECT DISTINCT {tname}.__tid AS __tid "
             f"FROM __del_target AS {tname}, {preprocess(from_sql)} "
             f"WHERE {cond}"
-        ).cache()
-        n = matched.count()
-        keep = t.join(matched, "__tid", "anti").drop("__tid")
-        ret = None
-        if returning is not None:
-            ret = self._returning(
-                t.join(matched, "__tid", "semi").drop("__tid"),
-                meta,
-                returning,
-            )
-        self._rewrite(meta, keep)
-        matched.unpersist()
+        )
+        with _cached(matched) as matched:
+            n = matched.count()
+            keep = t.join(matched, "__tid", "anti").drop("__tid")
+            ret = None
+            if returning is not None:
+                ret = self._returning(
+                    t.join(matched, "__tid", "semi").drop("__tid"),
+                    meta,
+                    returning,
+                )
+            self._rewrite(meta, keep)
         if ret is not None:
             return ret
         return self._status(f"delete {meta.name}", n)
@@ -2259,14 +2383,14 @@ class Engine:
         )
         # identity columns omitted from every INSERT list draw from their
         # sequence (same SERIAL semantics as _insert)
+        n_ins = None
         for c in meta.columns:
             if c.identity and c.name not in ins_cols:
-                n_ins = inserts.count()
+                n_ins = inserts.count() if n_ins is None else n_ins
                 if n_ins:
-                    seq = f"{meta.name}_{c.name}_seq"
-                    base_v = self.catalog.nextval(seq)
-                    for _ in range(n_ins - 1):
-                        self.catalog.nextval(seq)
+                    base_v = self.catalog.reserve(
+                        f"{meta.name}_{c.name}_seq", n_ins
+                    )
                     w = F.row_number().over(
                         Window.orderBy(F.monotonically_increasing_id())
                     )
@@ -2274,43 +2398,20 @@ class Engine:
                         c.name, (w + base_v - 1).cast(c.spark_type)
                     )
 
-        target_rows = target_rows.cache()
-        n = (
-            target_rows.filter("__hit").count()
-            + inserts.count()
-        )
-        final = (
-            target_rows.filter("__keep")
-            .drop("__keep", "__hit")
-            .unionByName(inserts)
-        )
-        # NOT NULL + enum domains + CHECK constraints re-checked on the
-        # merged result (UNIQUE/FK are insert-batch checks in _validate; a
-        # merge rewrites the table, so the batch-vs-existing split doesn't
-        # apply)
-        for e in meta.checks:
-            # pg semantics: CHECK passes on TRUE or NULL, fails on FALSE
-            bad = final.filter(
-                ~F.coalesce(F.expr(preprocess(e)), F.lit(True))
+        with _cached(target_rows) as target_rows:
+            n = target_rows.filter("__hit").count() + (
+                inserts.count() if n_ins is None else n_ins
             )
-            if bad.limit(1).count():
-                raise EngineError(f"CHECK violated: {meta.name}: {e}")
-        for c in meta.columns:
-            if not c.nullable or c.name in meta.primary_key:
-                if final.filter(F.col(c.name).isNull()).limit(1).count():
-                    raise EngineError(
-                        f"NOT NULL violated: {meta.name}.{c.name}"
-                    )
-            if c.enum_type:
-                domain = self.catalog.enums[c.enum_type]
-                bad = final.filter(
-                    ~F.col(c.name).isin(*domain) & F.col(c.name).isNotNull()
-                )
-                if bad.limit(1).count():
-                    raise EngineError(
-                        f"invalid {c.enum_type} value for {c.name}"
-                    )
-        self._rewrite(meta, final)
+            final = (
+                target_rows.filter("__keep")
+                .drop("__keep", "__hit")
+                .unionByName(inserts)
+            )
+            # the row-level rules re-checked on the merged result (UNIQUE/
+            # FK are insert-batch checks in _validate; a merge rewrites the
+            # table, so the batch-vs-existing split doesn't apply)
+            self._check_rows(meta, final)
+            self._rewrite(meta, final)
         return self._status(f"merge {meta.name}", n)
 
     def _optimize(self, s: str) -> DataFrame:
@@ -2505,10 +2606,9 @@ class Engine:
                 df = self.spark.read.csv(
                     path, schema=meta.spark_ddl(), header=header
                 )
-            self._validate(meta, df.cache())
-            n = df.count()
-            self._append(meta, df)
-            return self._status(f"copy {meta.name} from {path}", n)
+            return self._append_checked(
+                meta, df, None, f"copy {meta.name} from {path}"
+            )
         df = self._read(meta)
         self._write_copy(df, path, opts)
         return self._status(f"copy {meta.name} to {path}", df.count())
@@ -2605,7 +2705,6 @@ class Engine:
                 },
             }
         self.catalog.save()
-        self._register_pg_catalog()
         return self._status(f"analyzed {len(metas)} tables", len(metas))
 
     def _vacuum(self, s: str) -> DataFrame:

@@ -5,6 +5,7 @@ identity, enums, sequences, DML, views, MVs, COPY, EXPLAIN, pg-isms."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -993,3 +994,209 @@ def test_interval_typed_column(eng):
     # aggregate over intervals (sum of durations)
     tot = rows(eng.sql("SELECT SUM(dur) AS t FROM jobs"))[0][0]
     assert tot == datetime.timedelta(hours=2, minutes=15)
+
+
+def test_unique_treats_nulls_as_distinct(eng):
+    # pg: NULL keys never collide, within a batch or with existing rows
+    eng.sql("CREATE TABLE un (id INT PRIMARY KEY, email TEXT UNIQUE)")
+    eng.sql("INSERT INTO un VALUES (1, NULL), (2, NULL)")
+    eng.sql("INSERT INTO un VALUES (3, NULL)")
+    eng.sql("INSERT INTO un VALUES (4, 'a@x'), (5, NULL)")
+    with pytest.raises(EngineError, match=r"UNIQUE violated within batch"):
+        eng.sql("INSERT INTO un VALUES (6, 'b@x'), (7, 'b@x')")
+    with pytest.raises(EngineError, match=r"UNIQUE violated: un\(email\)"):
+        eng.sql("INSERT INTO un VALUES (8, 'a@x')")
+    assert rows(eng.sql("SELECT count(*) FROM un WHERE email IS NULL")) == [
+        (4,)
+    ]
+    # a composite key with a NULL part never collides either
+    eng.sql("CREATE TABLE un2 (a INT, b INT, UNIQUE (a, b))")
+    eng.sql("INSERT INTO un2 VALUES (1, NULL), (1, NULL)")
+    eng.sql("INSERT INTO un2 VALUES (1, NULL)")
+    assert rows(eng.sql("SELECT count(*) FROM un2")) == [(3,)]
+
+
+@pytest.mark.parametrize(
+    "values, error",
+    [
+        # CHECKs first, then per column in table order NOT NULL and enum,
+        # then per UNIQUE set within-batch before against-existing, then FK
+        ("(2, 'green', NULL, -1, 99)", "CHECK violated: pv: qty > 0"),
+        ("(NULL, 'green', NULL, 1, 99)", "NOT NULL violated: pv.id"),
+        ("(2, 'green', NULL, 1, 99)",
+         "invalid color value for c: 'green'"),
+        ("(2, 'red', NULL, 1, 99)", "NOT NULL violated: pv.code"),
+        ("(1, 'red', 'b', 1, 99), (3, 'red', 'b', 1, 99)",
+         "UNIQUE violated within batch: pv(code)"),
+        ("(2, 'red', 'a', 1, 99), (2, 'red', 'c', 1, 99)",
+         "UNIQUE violated: pv(code)"),
+        ("(2, 'red', 'b', 1, 99), (2, 'red', 'c', 1, 99)",
+         "UNIQUE violated within batch: pv(id)"),
+        ("(1, 'red', 'b', 1, 99)", "UNIQUE violated: pv(id)"),
+        ("(2, 'red', 'b', 1, 99)", "FK violated: pv(pid) -> par(ID)"),
+    ],
+)
+def test_violation_precedence(eng, values, error):
+    eng.sql("CREATE TYPE color AS ENUM ('red', 'blue')")
+    eng.sql("CREATE TABLE par (id INT PRIMARY KEY)")
+    eng.sql("INSERT INTO par VALUES (1)")
+    eng.sql(
+        "CREATE TABLE pv (id INT PRIMARY KEY, c color, "
+        "code TEXT NOT NULL UNIQUE, qty INT CHECK (qty > 0), "
+        "pid INT REFERENCES par(id))"
+    )
+    eng.sql("INSERT INTO pv VALUES (1, 'red', 'a', 1, 1)")
+    with pytest.raises(EngineError) as err:
+        eng.sql(f"INSERT INTO pv VALUES {values}")
+    assert str(err.value) == error
+    assert rows(eng.sql("SELECT id FROM pv")) == [(1,)]
+
+
+def test_version_one_is_empty_with_declared_types(eng):
+    # CREATE writes v1 without Spark; a read without a schema (VERSION AS
+    # OF 1) still sees the declared columns and types
+    eng.sql(
+        "CREATE TABLE v1t (id BIGINT PRIMARY KEY, s TEXT, n NUMERIC(10,2), "
+        "t TIMESTAMP, d DATE, b BOOLEAN, r REAL, y BYTEA, i INTERVAL, "
+        "a INT[])"
+    )
+    eng.sql(
+        "INSERT INTO v1t VALUES (1, 'x', 1.25, TIMESTAMP '2024-01-01 08:00:00', "
+        "DATE '2024-01-02', true, 1.5, X'01', INTERVAL '1' DAY, ARRAY(1, 2))"
+    )
+    current = eng.sql("SELECT * FROM v1t")
+    v1 = eng.sql("SELECT * FROM v1t VERSION AS OF 1")
+    assert v1.dtypes == current.dtypes
+    assert rows(v1) == []
+    assert rows(eng.sql("SELECT id, s, a FROM v1t")) == [(1, "x", [1, 2])]
+
+
+def test_sequence_values_reserved_in_one_step(eng, monkeypatch):
+    eng.sql("CREATE TABLE sq1 (v TEXT)")  # hidden rowid identity
+    eng.sql("CREATE TABLE sq2 (id SERIAL PRIMARY KEY, v TEXT)")
+    eng.sql("INSERT INTO sq1 VALUES ('a')")
+    eng.sql("INSERT INTO sq2 (v) VALUES ('a')")
+    saves = []
+    real_save = eng.catalog.save
+    monkeypatch.setattr(
+        eng.catalog, "save", lambda: (saves.append(1), real_save())
+    )
+    for table in ("sq1 VALUES", "sq2 (v) VALUES"):
+        saves.clear()
+        eng.sql(f"INSERT INTO {table} ('b'), ('c'), ('d'), ('e'), ('f')")
+        assert len(saves) == 1  # the version flip persists the advance
+    saves.clear()
+    eng.sql("CREATE TABLE sq_src (v TEXT)")
+    eng.sql("INSERT INTO sq_src VALUES ('g'), ('h'), ('i')")
+    saves.clear()
+    eng.sql(
+        "MERGE INTO sq2 USING sq_src s ON sq2.v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (v) VALUES (s.v)"
+    )
+    assert len(saves) == 1
+    ids = rows(eng.sql("SELECT rowid, v FROM sq1 ORDER BY rowid"))
+    assert ids == [(i + 1, v) for i, v in enumerate("abcdef")]
+    ids = rows(eng.sql("SELECT id, v FROM sq2 ORDER BY id"))
+    assert [i for i, _ in ids] == list(range(1, 10))
+    assert [v for _, v in ids][:6] == list("abcdef")
+    # the advance is on disk: a new engine continues the sequence
+    again = Engine(eng.spark, warehouse=eng.warehouse)
+    again.sql("INSERT INTO sq1 VALUES ('z')")
+    assert rows(again.sql("SELECT max(rowid) FROM sq1")) == [(7,)]
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_dml_releases_cached_batches(eng, spark):
+    eng.sql("CREATE TABLE ca (id INT PRIMARY KEY, v INT CHECK (v >= 0))")
+    eng.sql("CREATE TABLE ca_nk (v INT)")
+    eng.sql("CREATE TABLE ca_src (id INT, v INT)")
+    eng.sql("INSERT INTO ca_src VALUES (1, 5), (9, 9)")
+    before = _persistent_rdds(spark)
+    eng.sql("INSERT INTO ca VALUES (1, 1), (2, 2)")
+    eng.sql("INSERT INTO ca_nk VALUES (1), (2)")
+    eng.sql("INSERT INTO ca VALUES (2, 0), (3, 3) ON CONFLICT DO NOTHING")
+    eng.sql("UPDATE ca SET v = v + 1 WHERE id > 1")
+    eng.sql(
+        "INSERT INTO ca VALUES (3, 30), (4, 4) "
+        "ON CONFLICT (id) DO UPDATE SET v = excluded.v"
+    )
+    eng.sql(
+        "MERGE INTO ca USING ca_src s ON ca.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"
+    )
+    with pytest.raises(EngineError, match="CHECK"):
+        eng.sql("INSERT INTO ca VALUES (10, -1)")
+    assert _persistent_rdds(spark) - before == set()
+    assert rows(eng.sql("SELECT id, v FROM ca ORDER BY id")) == [
+        (1, 5), (2, 3), (3, 30), (4, 4), (9, 9),
+    ]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"engine-job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "engine job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ddl_and_small_insert_job_counts(eng, spark):
+    # catalog bookkeeping runs no Spark job: CREATE writes v1 through
+    # pyarrow, the pg_catalog views wait for a reader, status rows are
+    # local relations
+    assert _jobs(spark, lambda: eng.sql(
+        "CREATE TABLE jc (id BIGINT PRIMARY KEY, v TEXT, q INT CHECK (q > 0))"
+    )) == 0
+    eng.sql("INSERT INTO jc VALUES (1, 'a', 1)")
+    # caching the batch (1), one aggregate for the row rules and the
+    # count (2: its shuffle and its result), one grouped query for the
+    # primary key (3: two shuffles and the result), the write (1)
+    assert _jobs(spark, lambda: eng.sql(
+        "INSERT INTO jc VALUES (2, 'b', 2), (3, 'c', 3)"
+    )) == 7
+    assert _jobs(spark, lambda: eng.sql("DROP TABLE jc")) == 0
+
+
+def test_pg_catalog_follows_ddl(eng):
+    def tables():
+        return rows(eng.sql(
+            "SELECT tablename FROM pg_tables ORDER BY tablename"
+        ))
+
+    assert tables() == []
+    eng.sql("CREATE TABLE lz (id INT PRIMARY KEY)")
+    assert tables() == [("lz",)]
+    eng.sql("ALTER TABLE lz RENAME TO lz2")
+    assert tables() == [("lz2",)]
+    # later in the same batch, after the views were read earlier in it
+    out = eng.sql(
+        "SELECT tablename FROM pg_tables; CREATE TABLE lz3 (v INT); "
+        "SELECT tablename FROM pg_tables ORDER BY tablename"
+    )
+    assert rows(out) == [("lz2",), ("lz3",)]
+    out = eng.sql(
+        "DROP TABLE lz2; ALTER TABLE lz3 RENAME TO lz4; "
+        "SELECT tablename FROM pg_tables"
+    )
+    assert rows(out) == [("lz4",)]
+    out = eng.sql(
+        "INSERT INTO lz4 VALUES (1), (2); ANALYZE lz4; "
+        "SELECT n_rows FROM pg_stats WHERE tablename = 'lz4'"
+    )
+    assert rows(out) == [(2,)]
+    eng.sql("INSERT INTO lz4 VALUES (3)")
+    eng.sql("ANALYZE lz4")
+    assert rows(eng.sql(
+        "SELECT n_rows FROM pg_stats WHERE tablename = 'lz4'"
+    )) == [(3,)]
+    eng.sql("DROP TABLE lz4")
+    assert tables() == []
