@@ -8,6 +8,7 @@ designed for 100 TB scale.
 
 Layout:
   session     SparkSession factory tuned for analytics (AQE, UTC, Arrow)
+  worker_daemon  Python worker daemon that skips needless zip re-reads
   io          parquet table loading / temp-view registration
   engine      SQL facade: PostgreSQL-flavored DDL/DML/queries -> Spark
   catalog     JSON metastore (enums, sequences, identity, views, MVs)

@@ -8,6 +8,15 @@ Design notes (100 TB target, tested on local[N]):
 - Session timezone pinned to UTC so timestamp semantics are deterministic and
   match the DuckDB oracle (naive timestamps).
 - Arrow on for the pandas-UDF extension operators (vectorized Python exchange).
+- Python workers fork from ``cassandra_sql_spark.worker_daemon``. On CPython
+  < 3.13 every task's ``importlib.invalidate_caches()`` re-reads the whole
+  central directory of pyspark.zip, once per zipimporter over it: 0.15-0.2 s
+  of worker CPU per task, about half of a streaming micro-batch. The daemon
+  re-reads an archive only when it changed on disk. The daemon module is a
+  static conf, so ``tune()`` cannot apply it to an externally provided
+  session: such a session keeps the per-task cost.
+- The library root goes on the workers' PYTHONPATH, so the daemon and every
+  UDF that references library code import from any working directory.
 """
 
 from __future__ import annotations
@@ -15,6 +24,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+LIBRARY_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -25,7 +36,8 @@ def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable conf to an externally provided session.
 
     The correctness driver hands us its own SparkSession; these settings are
-    the subset of our tuning that can be applied after session start.
+    the subset of our tuning that can be applied after session start. The
+    worker daemon and the workers' PYTHONPATH are static and stay unset.
     """
     conf = spark.conf
     conf.set("spark.sql.session.timeZone", "UTC")
@@ -64,7 +76,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/root/repo/.warehouse"))
+        .config("spark.python.daemon.module", "cassandra_sql_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (LIBRARY_ROOT, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
